@@ -62,19 +62,13 @@ def deletion_variants(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def fuzzy_candidates_d1(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_bucket: int | None = None,
+def _d1_bucket_pairs(
+    df: DataFrame, text_col: str, id_col: str, max_bucket: int | None
 ) -> DataFrame:
-    """UNVERIFIED candidate pairs (id_a, id_b, name_a, name_b), id_a <
-    id_b: every pair sharing a deletion-1 variant — a superset of the
-    true d<=1 pairs (bucket collisions included), which is what the
-    blocking-efficiency measurement queries count before the verify.
-    ``max_bucket`` drops variant keys shared by more than that many
-    rows (documented recall trade for adversarial boilerplate); None
-    keeps exactness."""
+    """(var, id_a, name_a, id_b, name_b) bucket-mates on the deletion-1
+    variant key, id_a < id_b, one row per shared variant (NOT
+    distinct). ``max_bucket`` drops variant keys shared by more than
+    that many rows."""
     v = deletion_variants(df, text_col, id_col)
     if max_bucket is not None:
         keep = (
@@ -94,9 +88,24 @@ def fuzzy_candidates_d1(
         F.col("id").alias("id_b"),
         F.col("name").alias("name_b"),
     )
+    return a.join(b, "var").filter(F.col("id_a") < F.col("id_b"))
+
+
+def fuzzy_candidates_d1(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """UNVERIFIED candidate pairs (id_a, id_b, name_a, name_b), id_a <
+    id_b: every pair sharing a deletion-1 variant — a superset of the
+    true d<=1 pairs (bucket collisions included), which is what the
+    blocking-efficiency measurement queries count before the verify.
+    ``max_bucket`` drops variant keys shared by more than that many
+    rows (documented recall trade for adversarial boilerplate); None
+    keeps exactness."""
     return (
-        a.join(b, "var")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _d1_bucket_pairs(df, text_col, id_col, max_bucket)
         .select("id_a", "id_b", "name_a", "name_b")
         .distinct()
     )
@@ -123,28 +132,8 @@ def fuzzy_pairs_d1(
     distance, so the emitted surface is unchanged. Callers that need
     the UNVERIFIED candidate stream (blocking-efficiency stats) use
     :func:`fuzzy_candidates_d1` directly."""
-    v = deletion_variants(df, text_col, id_col)
-    if max_bucket is not None:
-        keep = (
-            v.groupBy("var")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket)
-            .select("var")
-        )
-        v = v.join(keep, "var")
-    a = v.select(
-        F.col("var"),
-        F.col("id").alias("id_a"),
-        F.col("name").alias("name_a"),
-    )
-    b = v.select(
-        F.col("var"),
-        F.col("id").alias("id_b"),
-        F.col("name").alias("name_b"),
-    )
     return (
-        a.join(b, "var")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _d1_bucket_pairs(df, text_col, id_col, max_bucket)
         .withColumn("dist", F.levenshtein("name_a", "name_b", 1))
         .filter(F.col("dist") >= 0)
         .select("id_a", "id_b", "name_a", "name_b", "dist")

@@ -417,7 +417,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.3,
     shingle_n: int = 3,
     max_doc_freq: int | None = None,
-    cache_key: object = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted-index join.
 
@@ -434,20 +433,15 @@ def ngram_jaccard_pairs(
     caching): both self-join sides consume the exploded relation, and
     uncached each side would redo the normalize/shingle/cap work
     (measured 3x slower at sf0.1) — but a plain ``.cache()`` outlives
-    the call in a multi-query session. ``cache_key`` (optional) names
-    the INPUT's logical identity (e.g. ``(sf_dir, "documents")``):
-    consecutive calls with an equal key reuse the warm slot instead of
-    rebuilding; callers over changing inputs leave it None.
+    the call in a multi-query session. Consecutive calls over the same
+    plan and input files reuse the warm slot instead of rebuilding.
     """
-    slot_key = (
-        None if cache_key is None else (cache_key, shingle_n, max_doc_freq)
-    )
     g = gram_arrays(df, text_col, id_col, shingle_n)
     if max_doc_freq is not None:
         # Persisted because the cap reads g twice (stop-list scan +
         # capped projection); the capped arrays then feed the explode.
         g = capped_gram_arrays(
-            one_slot_persist(g, slot="minhash-njp-grams", key=slot_key),
+            one_slot_persist(g, slot="minhash-njp-grams"),
             max_doc_freq,
         )
     # Set size travels WITH each exploded row (one extra int column), so
@@ -458,7 +452,6 @@ def ngram_jaccard_pairs(
             g.select("doc", F.size("grams").alias("n"), "grams"), "doc", "n"
         ),
         slot="minhash-njp-exploded",
-        key=slot_key,
     )
     sa = sh.select(
         F.col("doc").alias("doc_a"), F.col("n").alias("n_a"), "shingle"
@@ -488,7 +481,6 @@ def minhash_lsh_dedupe(
     shingle_n: int = 3,
     max_doc_freq: int | None = None,
     persist_intermediate: bool = True,
-    cache_key: object = None,
 ) -> DataFrame:
     """Near-dup pairs with exact Jaccard >= threshold (candidates via LSH).
 
@@ -508,22 +500,18 @@ def minhash_lsh_dedupe(
     Cache lifetime (r10): the internal persists are ONE-SLOT caches
     (operators/caching) — each call releases the previous call's gram
     relations, so repeated passes bound session cache to one relation
-    per site instead of leaking one entry per invocation. Passing
-    ``cache_key`` (the input's logical identity, e.g. ``(sf_dir,
-    "documents")``) additionally lets consecutive same-input calls
-    reuse the warm slot. ``persist_intermediate=False`` skips the
-    persists entirely — the gram lineage is then recomputed by its 2-3
+    per site instead of leaking one entry per invocation, and
+    consecutive calls over the same plan and input files reuse the warm
+    slot. ``persist_intermediate=False`` skips the persists entirely —
+    the gram lineage is then recomputed by its 2-3
     consumers; the streaming ingest job does exactly this, and
     repeated passes over the SAME corpus should use
     :class:`MinHashCorpusIndex` + :func:`minhash_lsh_incremental_indexed`,
     whose persistence is explicit (``index.persist()``/``unpersist()``).
     """
-    slot_key = (
-        None if cache_key is None else (cache_key, shingle_n, max_doc_freq)
-    )
     g = gram_arrays(df, text_col, id_col, shingle_n)
     if persist_intermediate:
-        g = one_slot_persist(g, slot="minhash-lsh-grams", key=slot_key)
+        g = one_slot_persist(g, slot="minhash-lsh-grams")
     sigs = minhash_signatures_from_grams(g, num_hashes)
     bands = lsh_band_keys(sigs, num_hashes, band_size)
     pairs = candidate_pairs(bands)
@@ -534,9 +522,7 @@ def minhash_lsh_dedupe(
     else:
         gv = capped_gram_arrays(g, max_doc_freq)
         if persist_intermediate:
-            gv = one_slot_persist(
-                gv, slot="minhash-lsh-grams-capped", key=slot_key
-            )
+            gv = one_slot_persist(gv, slot="minhash-lsh-grams-capped")
     return (
         jaccard_verify_arrays(pairs, gv)
         .filter(F.col("jaccard") >= threshold)
@@ -554,7 +540,6 @@ def minhash_lsh_incremental(
     band_size: int = DEFAULT_BAND_SIZE,
     shingle_n: int = 3,
     max_doc_freq: int | None = None,
-    cache_key: object = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup detection: (new_doc, corpus_doc, jaccard)
     pairs where a NEW-batch document near-duplicates an EXISTING-corpus
@@ -580,20 +565,16 @@ def minhash_lsh_incremental(
 
     Cache lifetime (r10): the ``gn``/``gc`` persists are one-slot
     caches (operators/caching) — each call releases the previous
-    call's relations, bounding session cache; ``cache_key`` names the
-    (new, corpus) input identity for warm reuse across same-input
-    calls. The indexed variant has no hidden caches at all.
+    call's relations, bounding session cache, and same-input calls
+    reuse them warm. The indexed variant has no hidden caches at all.
     """
-    slot_key = None if cache_key is None else (cache_key, shingle_n)
     gn = one_slot_persist(
         gram_arrays(new_df, text_col, id_col, shingle_n),
         slot="minhash-incr-new-grams",
-        key=slot_key,
     )
     gc = one_slot_persist(
         gram_arrays(corpus_df, text_col, id_col, shingle_n),
         slot="minhash-incr-corpus-grams",
-        key=slot_key,
     )
     bn = lsh_band_keys(
         minhash_signatures_from_grams(gn, num_hashes), num_hashes, band_size
@@ -851,7 +832,6 @@ def prefix_filter_jaccard_pairs(
     t_num: int = 3,
     t_den: int = 10,
     slot: str | None = None,
-    key: object = None,
 ) -> DataFrame:
     """EXACT thresholded set-similarity join (Jaccard >= t_num/t_den)
     over a (doc, grams) ARRAY relation via PREFIX FILTERING (Chaudhuri
@@ -879,7 +859,7 @@ def prefix_filter_jaccard_pairs(
     and document frequencies while ``array_intersect`` dedupes,
     skewing every count.
 
-    ``slot``/``key`` one-slot-persist the ordered-prefix relation (it
+    ``slot`` one-slot-persists the ordered-prefix relation (it
     is consumed twice: candidate generation + verification). The
     persisted relation is THRESHOLD-INDEPENDENT (the rare-first order
     and set sizes; ``prefix_len`` is computed at explode time), so
@@ -899,7 +879,7 @@ def prefix_filter_jaccard_pairs(
         .withColumn("n", F.size("og"))
     )
     ov = (
-        one_slot_persist(ordered, slot=slot, key=key)
+        one_slot_persist(ordered, slot=slot)
         if slot is not None
         else ordered
     )
@@ -1032,7 +1012,6 @@ def ngram_overlap_pairs(
     t_den: int = 5,
     shingle_n: int = 3,
     max_doc_freq: int | None = None,
-    cache_key: object = None,
 ) -> DataFrame:
     """EXACT overlap-coefficient pairs (Szymkiewicz-Simpson:
     inter / min(|A|, |B|) >= t_num/t_den) via the same inverted-index
@@ -1047,15 +1026,12 @@ def ngram_overlap_pairs(
     t_den * inter >= t_num * min(n_a, n_b) — no float anywhere; the
     emitted row is the exact integer triple (n_inter, n_a, n_b) that
     determines the coefficient. Shares the ``minhash-njp-*`` one-slot
-    caches with the Jaccard twin (same ``cache_key`` contract), so
-    consecutive runs of both reuse one warm exploded relation."""
-    slot_key = (
-        None if cache_key is None else (cache_key, shingle_n, max_doc_freq)
-    )
+    caches with the Jaccard twin, so consecutive runs of both over the
+    same input reuse one warm exploded relation."""
     g = gram_arrays(df, text_col, id_col, shingle_n)
     if max_doc_freq is not None:
         g = capped_gram_arrays(
-            one_slot_persist(g, slot="minhash-njp-grams", key=slot_key),
+            one_slot_persist(g, slot="minhash-njp-grams"),
             max_doc_freq,
         )
     sh = one_slot_persist(
@@ -1063,7 +1039,6 @@ def ngram_overlap_pairs(
             g.select("doc", F.size("grams").alias("n"), "grams"), "doc", "n"
         ),
         slot="minhash-njp-exploded",
-        key=slot_key,
     )
     sa = sh.select(
         F.col("doc").alias("doc_a"), F.col("n").alias("n_a"), "shingle"

@@ -85,7 +85,6 @@ def simhash_near_pairs(
     id_col: str,
     max_hamming: int = 2,
     bits: int = FINGERPRINT_BITS,
-    cache_key: object = None,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) pairs within ``max_hamming``.
 
@@ -112,11 +111,10 @@ def simhash_near_pairs(
 
     # one-slot persisted (operators/caching): the fingerprint relation
     # feeds both band explodes; bounded across sessions, warm across
-    # same-cache_key calls
+    # same-input calls
     fp = one_slot_persist(
         simhash_fingerprints(df, text_col, id_col, bits),
         slot="simhash-fingerprints",
-        key=None if cache_key is None else (cache_key, bits),
     )
     half = bits // 2
     seg = fp.select(

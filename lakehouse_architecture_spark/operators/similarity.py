@@ -359,42 +359,6 @@ def knn_ivf(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 4,
-) -> DataFrame:
-    """Near-duplicate vector pairs (cosine >= threshold) via LSH-bucketed
-    self-join — the embedding-space analog of MinHash dedup. Buckets with
-    few planes are coarse (high recall, more comparisons)."""
-    b = lsh_bucket(df, vec_col, num_planes, dim)
-    a, c = b.alias("a"), b.alias("b")
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col(f"a.{vec_col}").alias("va"),
-        F.col(f"b.{vec_col}").alias("vb"),
-    )
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            (
-                dot(F.col("va"), F.col("vb"))
-                / F.sqrt(dot(F.col("va"), F.col("va")) * dot(F.col("vb"), F.col("vb")))
-            ).alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
 def ivf_build_index(
     spark,
     corpus: DataFrame,

@@ -424,7 +424,6 @@ def lineitem_winsorized_price_stats(
             F.count(F.lit(1)).alias("cnt")
         ),
         slot="winsor-price-counts",
-        key=(sf_dir,),
     )
     q = grouped_interpolated_quantiles(
         li, ["l_returnflag"], "l_extendedprice", [0.05, 0.95],

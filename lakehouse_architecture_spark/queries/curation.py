@@ -84,7 +84,6 @@ def docs_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.3, max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     ).select("doc_a", "doc_b")
     labels = connected_components(edges)
     return labels.select(
@@ -138,7 +137,6 @@ def docs_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.3, max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     ).select("doc_a", "doc_b")
     labels = connected_components(edges)
     packed = (
@@ -510,13 +508,11 @@ def docs_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("canon.text").alias("text"),
         ),
         slot="curation-funnel-s4",
-        key=(sf_dir,),
     )
     n4df = s4.agg(F.count(F.lit(1)).alias("n4"))
     counts = counts.crossJoin(n4df)
     pairs = ngram_jaccard_pairs(
         s4, "text", "doc_id", threshold=0.3, max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "funnel-s4"),
     )
     # Every doc_b comes from s4, so n5 = n4 - |distinct doc_b| without
     # re-materializing the anti-joined survivor relation.
@@ -580,7 +576,6 @@ def docs_dup_cluster_size_histogram(
     docs = load_table(spark, sf_dir, "documents")
     edges = ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.3, max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     ).select("doc_a", "doc_b")
     labels = connected_components(edges)
     csize = labels.groupBy("comp").agg(

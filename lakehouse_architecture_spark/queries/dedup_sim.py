@@ -113,7 +113,6 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=8,
         band_size=2,
         max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     )
 
 
@@ -197,12 +196,11 @@ def minhash_estimate_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # one-slot persisted (operators/caching): the gram relation feeds
     # the signature projection and the capped verify arrays; the slot
-    # is SHARED with minhash_recall_curve (same logical relation, same
-    # key), so consecutive runs stay warm while staying bounded
+    # is SHARED with minhash_recall_curve (same plan over the same
+    # files), so consecutive runs stay warm while staying bounded
     g = one_slot_persist(
         gram_arrays(docs, "text", "doc_id"),
         slot="dedup-sim-doc-grams",
-        key=(sf_dir,),
     )
     sigs = minhash_signatures_from_grams(g, 8)
     pairs = candidate_pairs(lsh_band_keys(sigs, 8, 2))
@@ -221,7 +219,6 @@ def minhash_estimate_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     gv = one_slot_persist(
         capped_gram_arrays(g, MAX_DOC_FREQ),
         slot="dedup-sim-doc-grams-capped",
-        key=(sf_dir, MAX_DOC_FREQ),
     )
     ga = gv.select(F.col("doc").alias("doc_a"), F.col("grams").alias("ga")).hint(
         "shuffle_hash"
@@ -307,7 +304,6 @@ def simhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return simhash_near_pairs(
         docs, "text", "doc_id", max_hamming=3,
-        cache_key=(sf_dir, "documents"),
     )
 
 
@@ -536,7 +532,6 @@ def docs_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=0.3, max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     )
 
 
@@ -856,7 +851,6 @@ def docs_incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         threshold=0.3,
         max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "mod10-split"),
     )
 
 
@@ -995,11 +989,10 @@ def minhash_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     # one-slot persisted; slots shared with minhash_estimate_qa (same
-    # logical relations + keys -> warm across consecutive runs)
+    # plans over the same files -> warm across consecutive runs)
     g = one_slot_persist(
         gram_arrays(docs, "text", "doc_id"),
         slot="dedup-sim-doc-grams",
-        key=(sf_dir,),
     )
     cands = candidate_pairs(
         lsh_band_keys(minhash_signatures_from_grams(g, 8), 8, 2)
@@ -1007,7 +1000,6 @@ def minhash_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     gv = one_slot_persist(
         capped_gram_arrays(g, MAX_DOC_FREQ),
         slot="dedup-sim-doc-grams-capped",
-        key=(sf_dir, MAX_DOC_FREQ),
     )
     sh = gv.select(
         "doc", F.size("grams").alias("n"), F.explode("grams").alias("shingle")
@@ -1180,12 +1172,10 @@ def customers_fuzzy_name_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = one_slot_persist(
         deletion_variants(cust, "c_name", "c_custkey"),
         slot="dedup-sim-fuzzy-variants",
-        key=(sf_dir,),
     )
     cand = one_slot_persist(
         fuzzy_candidates_d1(cust, "c_name", "c_custkey"),
         slot="dedup-sim-fuzzy-cands",
-        key=(sf_dir,),
     )
     matched = cand.filter(F.levenshtein("name_a", "name_b", 1) >= 0)
     s_ent = cust.agg(F.count(F.lit(1)).alias("n_entities"))
@@ -1255,7 +1245,7 @@ def customers_fuzzy_pairs_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = load_table(spark, sf_dir, "customer")
-    # Same construction + slot + key as the capped twin: the variant
+    # Same construction + slot as the capped twin: the variant
     # relation and its (var, n) bucket counts are identical logical
     # relations, so consecutive fuzzy rows share one cached build
     # (r17 — previously this row re-exploded the neighborhood from
@@ -1264,12 +1254,10 @@ def customers_fuzzy_pairs_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = one_slot_persist(
         deletion_variants_d2(cust, "c_name", "c_custkey"),
         slot="dedup-sim-fuzzy-d2-variants",
-        key=(sf_dir,),
     )
     kc = one_slot_persist(
         v.groupBy("var").agg(F.count(F.lit(1)).alias("n")),
         slot="dedup-sim-fuzzy-d2-bucket-counts",
-        key=(sf_dir,),
     )
     pairs = fuzzy_pairs_d2(
         cust, "c_name", "c_custkey", variants=v, bucket_counts=kc
@@ -1383,7 +1371,6 @@ def customers_fuzzy_pairs_d2_capped(
     v = one_slot_persist(
         deletion_variants_d2(cust, "c_name", "c_custkey"),
         slot="dedup-sim-fuzzy-d2-variants",
-        key=(sf_dir,),
     )
     # r16: the (var, n) bucket counts feed BOTH the key statistics and
     # the operator's keep-filter — persisted once instead of two full
@@ -1391,7 +1378,6 @@ def customers_fuzzy_pairs_d2_capped(
     kc = one_slot_persist(
         v.groupBy("var").agg(F.count(F.lit(1)).alias("n")),
         slot="dedup-sim-fuzzy-d2-bucket-counts",
-        key=(sf_dir,),
     )
     stats = kc.agg(
         F.count(F.lit(1)).alias("n_keys_total"),
@@ -1522,7 +1508,6 @@ def docs_prefix_fuzzy_pairs_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = one_slot_persist(
         deletion_variants_d2(docs, "prefix", "doc_id"),
         slot="dedup-sim-docs-prefix-d2-variants",
-        key=(sf_dir,),
     )
     stats = v.agg(F.count(F.lit(1)).alias("n_variants")).crossJoin(
         v.groupBy("var")
@@ -1691,17 +1676,14 @@ def customers_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer")
     # one-slot persisted (operators/caching): pairs feed the components
-    # fixpoint + the pair census; labels feed two cluster aggregates
+    # fixpoint + the pair census. The labels feeding the two cluster
+    # aggregates need no persist: they are a projection over the
+    # fixpoint's last checkpointed round, already materialized.
     pairs = one_slot_persist(
         fuzzy_pairs_d1(cust, "c_name", "c_custkey").select("id_a", "id_b"),
         slot="dedup-sim-er-pairs",
-        key=(sf_dir,),
     )
-    labels = one_slot_persist(
-        connected_components(pairs, src="id_a", dst="id_b"),
-        slot="dedup-sim-er-labels",
-        key=(sf_dir,),
-    )
+    labels = connected_components(pairs, src="id_a", dst="id_b")
     s_ent = cust.agg(F.count(F.lit(1)).alias("n_entities"))
     s_pairs = pairs.agg(F.count(F.lit(1)).alias("n_dup_pairs"))
     s_in = labels.agg(F.count(F.lit(1)).alias("n_entities_in_clusters"))
@@ -1734,7 +1716,7 @@ def _word_spans(df: DataFrame, k: int) -> DataFrame:
     return word_spans(df, k)
 
 
-def _persist_spans(spans: DataFrame, sf_dir: str, k: int) -> DataFrame:
+def _persist_spans(spans: DataFrame) -> DataFrame:
     """One-slot persist of the span posting relation (see
     operators/caching.one_slot_persist): the span queries return LAZY
     DataFrames, so they cannot unpersist in a finally block the way
@@ -1743,16 +1725,15 @@ def _persist_spans(spans: DataFrame, sf_dir: str, k: int) -> DataFrame:
     previous one's posting list, bounding the session-wide cache to
     one relation (the r8 ADVICE leak).
 
-    Identity-keyed (r10): consecutive span queries over the same
-    ``(sf_dir, k)`` reuse the slot's warm relation instead of
-    unpersist+rebuild — the r9 one-slot conversion paid a cold rebuild
-    per query (~+1.8 s each at sf0.1, the dominant extras-wall change
-    that round); the key recovers the r8 warmth while staying bounded."""
+    Consecutive span queries over the same corpus and span width reuse
+    the slot's warm relation instead of unpersist+rebuild — the r9
+    one-slot conversion paid a cold rebuild per query (~+1.8 s each at
+    sf0.1, the dominant extras-wall change that round)."""
     from lakehouse_architecture_spark.operators.caching import (
         one_slot_persist,
     )
 
-    return one_slot_persist(spans, slot="dedup-sim-spans", key=(sf_dir, k))
+    return one_slot_persist(spans, slot="dedup-sim-spans")
 
 
 @query(
@@ -1804,7 +1785,7 @@ def docs_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds the DF-count aggregate AND both sides of the pair join —
     # uncached, the heavy window/string work recomputes per consumer
     # (measured ~4.8 -> ~2 s at sf0.1)
-    spans = _persist_spans(_word_spans(docs, 8), sf_dir, 8)
+    spans = _persist_spans(_word_spans(docs, 8))
     df_counts = spans.groupBy("span").agg(F.count(F.lit(1)).alias("n_docs"))
     kept = (
         spans.join(df_counts, "span")
@@ -1875,7 +1856,7 @@ def docs_copied_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # persist (one-slot, see _persist_spans): reused by the DF-count
     # aggregate and the per-doc join
-    spans = _persist_spans(_word_spans(docs, 8), sf_dir, 8)
+    spans = _persist_spans(_word_spans(docs, 8))
     df_counts = spans.groupBy("span").agg(F.count(F.lit(1)).alias("n_docs"))
     per_doc = (
         spans.join(df_counts, "span")
@@ -1956,7 +1937,7 @@ def docs_incremental_copied_spans(spark: SparkSession, sf_dir: str) -> DataFrame
     # persisted full relation is exactly filtering the input first) —
     # one warm tokenize/explode pass instead of two per run, shared
     # with the other span queries' slot (guide §2.4).
-    spans = _persist_spans(_word_spans(docs, 8), sf_dir, 8)
+    spans = _persist_spans(_word_spans(docs, 8))
     corpus_spans = (
         spans.filter(F.col("doc_id") < 400).select("span").distinct()
     )
@@ -2052,19 +2033,16 @@ def docs_prefix_filter_jaccard_join(
     g = one_slot_persist(
         gram_arrays(docs, "text", "doc_id"),
         slot="dedup-sim-doc-grams",
-        key=(sf_dir,),
     )
     gv = one_slot_persist(
         capped_gram_arrays(g, MAX_DOC_FREQ),
         slot="dedup-sim-doc-grams-capped",
-        key=(sf_dir, MAX_DOC_FREQ),
     )
     return prefix_filter_jaccard_pairs(
         gv,
         t_num=3,
         t_den=10,
         slot="dedup-sim-prefix-ordered",
-        key=(sf_dir, MAX_DOC_FREQ),
     ).orderBy("doc_a", "doc_b")
 
 
@@ -2132,19 +2110,16 @@ def docs_prefix_filter_jaccard_join_strict(
     g = one_slot_persist(
         gram_arrays(docs, "text", "doc_id"),
         slot="dedup-sim-doc-grams",
-        key=(sf_dir,),
     )
     gv = one_slot_persist(
         capped_gram_arrays(g, MAX_DOC_FREQ),
         slot="dedup-sim-doc-grams-capped",
-        key=(sf_dir, MAX_DOC_FREQ),
     )
     return prefix_filter_jaccard_pairs(
         gv,
         t_num=4,
         t_den=5,
         slot="dedup-sim-prefix-ordered",
-        key=(sf_dir, MAX_DOC_FREQ),
     ).orderBy("doc_a", "doc_b")
 
 
@@ -2194,5 +2169,4 @@ def docs_overlap_coefficient_pairs(
         t_num=4,
         t_den=5,
         max_doc_freq=MAX_DOC_FREQ,
-        cache_key=(sf_dir, "documents"),
     ).orderBy("doc_a", "doc_b")

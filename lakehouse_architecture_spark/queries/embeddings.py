@@ -915,7 +915,6 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vec_id", "embedding", "centroid_id"),
         slot="emb-semantic-assignment",
-        key=(sf_dir,),
     )
     # Within-cluster pair search (r16, guide §4.2): the former JVM
     # decimal-dot self-join evaluated the 64-dim decimal fold on EVERY

@@ -1578,7 +1578,6 @@ def events_kmv_intersection_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = one_slot_persist(
         tagged.select("side", kmv_hash(F.col("c")).alias("h")).distinct(),
         slot="events-kmv-hs",
-        key=(sf_dir,),
     )
     sk = kmv_sketch_by(hs, "side", K)
 
@@ -1752,7 +1751,6 @@ def events_kmv_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("day"), kmv_hash(cell).alias("h")
         ).distinct(),
         slot="events-kmv-daily-hs",
-        key=(sf_dir,),
     )
     # The daily-sketch relation feeds TWO consumers (the output rows
     # and the sketch merge) — without the persist the whole two-stage
@@ -1762,7 +1760,6 @@ def events_kmv_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = one_slot_persist(
         kmv_sketch_by(hs, "day", K),
         slot="events-kmv-daily-sketches",
-        key=(sf_dir,),
     )
     # Merge from the SKETCHES only: k smallest across all daily arrays.
     # |days| x k rows -> one bounded collect_list fold (no window, no
@@ -1900,7 +1897,6 @@ def events_kmv_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
             kmv_hash(F.col("user_id").cast("string")).alias("h"),
         ).distinct(),
         slot="events-kmv-nvr-hs",
-        key=(sf_dir,),
     )
     daily = kmv_sketch_by(hs, "day", K)  # (day, kmv, n)
     sketches = daily.select("day", "kmv")
@@ -2082,7 +2078,6 @@ def events_value_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grain = one_slot_persist(
             base.groupBy("day", "vc").agg(F.count(F.lit(1)).alias("cnt")),
             slot="events-vq-grain",
-            key=(sf_dir,),
         )
         hist = grain.groupBy("day", bucket).agg(
             F.sum("cnt").alias("cnt")
@@ -2092,7 +2087,6 @@ def events_value_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist = one_slot_persist(
             base.groupBy("day", bucket).agg(F.count(F.lit(1)).alias("cnt")),
             slot="events-vq-hist",
-            key=(sf_dir,),
         )
         vcc_src = base.groupBy("vc").agg(F.count(F.lit(1)).alias("cnt"))
     merged = hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
@@ -2315,7 +2309,6 @@ def events_chi2_type_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("o")
         ),
         slot="events-chi2-obs",
-        key=(sf_dir,),
     )
     rows = obs.groupBy("event_type").agg(F.sum("o").alias("r"))
     cols = obs.groupBy("dow").agg(F.sum("o").alias("c"))
@@ -2458,7 +2451,6 @@ def events_stickiness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = one_slot_persist(
         ev.select(F.col("ts").cast("date").alias("day"), "user_id").distinct(),
         slot="events-activity-grain",
-        key=(sf_dir,),
     )
     days = act.select("day").distinct()
     dau = act.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
@@ -2618,7 +2610,6 @@ def events_value_quantile_rollup_by_type(
                 F.count(F.lit(1)).alias("cnt")
             ),
             slot="events-vq-grain-by-type",
-            key=(sf_dir,),
         )
         hist = grain.groupBy("event_type", "day", bucket).agg(
             F.sum("cnt").alias("cnt")
@@ -2632,7 +2623,6 @@ def events_value_quantile_rollup_by_type(
                 F.count(F.lit(1)).alias("cnt")
             ),
             slot="events-vq-hist-by-type",
-            key=(sf_dir,),
         )
         vcc_src = base.groupBy("event_type", "vc").agg(
             F.count(F.lit(1)).alias("cnt")

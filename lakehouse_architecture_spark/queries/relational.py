@@ -1507,7 +1507,6 @@ def parts_coorder_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct(),
         slot="relational-tri-edges",
-        key=(sf_dir,),
     )
     deg = (
         und.select(F.col("src").alias("node"))
@@ -1528,7 +1527,6 @@ def parts_coorder_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(src_first, F.col("dst")).otherwise(F.col("src")).alias("b"),
         ),
         slot="relational-tri-fwd",
-        key=(sf_dir,),
     )
     # Out-neighbor adjacency arrays: |V| rows, each array <= the
     # O(sqrt|E|) orientation cap. No broadcast hint — at bench SF AQE
@@ -1661,8 +1659,8 @@ def parts_coorder_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds are data-bounded single digits. Deliberately NOT benched:
     a driver-bounded iteration times the loop, not a data-sized plan
     (the BPE doctrine). The edge build is the triangles query's
-    single-scan array form sharing the same identity-keyed slot, so
-    consecutive graph queries reuse the warm edge relation."""
+    single-scan array form sharing the same slot, so consecutive graph
+    queries reuse the warm edge relation."""
     from lakehouse_architecture_spark.operators.kcore import kcore_peel
 
     K = 80
@@ -1674,9 +1672,9 @@ def parts_coorder_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(slice(p, i + 2, size(p)), "
         "y -> struct(x AS src, y AS dst))))"
     )
-    # IDENTICAL construction + slot + key as parts_coorder_triangles:
-    # same logical relation, so the slot's warm hit is valid and the
-    # two graph queries share one cached edge build.
+    # IDENTICAL construction + slot as parts_coorder_triangles: the
+    # same plan over the same files, so the slot warm-hits and the two
+    # graph queries share one cached edge build.
     und = one_slot_persist(
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("p"))
@@ -1684,7 +1682,6 @@ def parts_coorder_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct(),
         slot="relational-tri-edges",
-        key=(sf_dir,),
     )
     n_edges = und.count()
     n_nodes = (
@@ -1811,18 +1808,15 @@ def orders_bloom_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_orderkey").alias("key"))
         .distinct(),
         slot="relational-bloom-dimk",
-        key=(sf_dir,),
     )
     factk = one_slot_persist(
         li.select(F.col("l_orderkey").alias("key")).distinct(),
         slot="relational-bloom-factk",
-        key=(sf_dir,),
     )
     words = bloom_build(dimk, "key", M, K)
     passk = one_slot_persist(
         bloom_pass_keys(factk, "key", words, M, K),
         slot="relational-bloom-passk",
-        key=(sf_dir,),
     )
     truek = factk.join(dimk, "key", "left_semi")
     s_dim = dimk.agg(F.count(F.lit(1)).alias("n_dim_keys"))
@@ -2205,7 +2199,6 @@ def lineitem_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("c")
         ),
         slot="relational-skew-perkey",
-        key=(sf_dir,),
     )
     top10 = per_key.orderBy(F.desc("c"), F.asc("k")).limit(10)
     s = per_key.agg(
@@ -2435,8 +2428,8 @@ def parts_coorder_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     block release; checkpoint_dir reliable option for clusters).
     Deliberately NOT benched: a driver-bounded iteration times the
     loop, not a data-sized plan (the BPE/PageRank/k-core doctrine).
-    The edge build shares the triangles/kcore identity-keyed slot, so
-    consecutive graph queries reuse the warm edge relation."""
+    The edge build shares the triangles/kcore slot, so consecutive
+    graph queries reuse the warm edge relation."""
     from lakehouse_architecture_spark.operators.kcore import core_numbers
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -2447,8 +2440,9 @@ def parts_coorder_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(slice(p, i + 2, size(p)), "
         "y -> struct(x AS src, y AS dst))))"
     )
-    # IDENTICAL construction + slot + key as parts_coorder_triangles /
-    # parts_coorder_kcore: same logical relation, shared warm slot.
+    # IDENTICAL construction + slot as parts_coorder_triangles /
+    # parts_coorder_kcore: same plan over the same files, shared warm
+    # slot.
     und = one_slot_persist(
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("p"))
@@ -2456,7 +2450,6 @@ def parts_coorder_core_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct(),
         slot="relational-tri-edges",
-        key=(sf_dir,),
     )
     res = core_numbers(und, max_rounds=48)
     return (
@@ -2574,7 +2567,6 @@ def parts_coorder_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct(),
         slot="relational-tri-edges",
-        key=(sf_dir,),
     )
     e = und.unionAll(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -2677,9 +2669,11 @@ def parts_coorder_link_prediction(
     Any unordered pair {x, y} — wedge or edge — lands in exactly one
     group (sorted block ids of x%B, y%B), so per-group counts are
     COMPLETE and the global top-20 over per-group top-20s is exact.
-    What shuffles is center-array SLICES (2|adjacency| values + the
-    edge relation), never the wedge stream — the §8 rule: move a
-    lightweight proxy, decide, never re-shuffle the heavy relation.
+    What shuffles is center-array SLICES plus the edge relation, never
+    the wedge stream — the §8 rule: move a lightweight proxy, decide,
+    never re-shuffle the heavy relation. Each slice rides in the B
+    block pairs it belongs to, twice in its diagonal pair, so the slice
+    volume is about (B+1)·|adjacency| values.
 
     Regime dispatch: n_blocks adapts to the EXACT capped wedge count
     (one 1-row aggregate over the persisted neighbor relation) so a
@@ -2708,7 +2702,7 @@ def parts_coorder_link_prediction(
         "transform(slice(p, i + 2, size(p)), "
         "y -> struct(x AS src, y AS dst))))"
     )
-    # IDENTICAL construction + slot + key as parts_coorder_triangles:
+    # IDENTICAL construction + slot as parts_coorder_triangles:
     # same logical relation, so consecutive graph queries share one
     # cached edge build.
     und = one_slot_persist(
@@ -2718,7 +2712,6 @@ def parts_coorder_link_prediction(
         .select("e.src", "e.dst")
         .distinct(),
         slot="relational-tri-edges",
-        key=(sf_dir,),
     )
     adj = und.select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
@@ -2732,7 +2725,6 @@ def parts_coorder_link_prediction(
             F.sort_array(F.collect_set("nbr")).alias("nb")
         ),
         slot="relational-linkpred-nbrs",
-        key=(sf_dir,),
     )
     CAP, K = 128, 20
     stats = nbrs.agg(

@@ -958,7 +958,6 @@ def docs_bigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         ).select("doc_id", "b.w1", "b.w2"),
         slot="text-bigram-rel",
-        key=(sf_dir,),
     )
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))

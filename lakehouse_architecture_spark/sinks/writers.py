@@ -95,10 +95,7 @@ def insert_if_absent(
     form to); existing keys are read with column pruning to the key
     columns only.
     """
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if exists:
+    if _has_data(path):
         existing_keys = spark.read.parquet(path).select(*keys)
         fresh = candidates.join(existing_keys, on=keys, how="left_anti")
     else:
@@ -109,6 +106,51 @@ def insert_if_absent(
         fresh.write.format("parquet").mode("append").save(path)
     fresh.unpersist()
     return n
+
+
+def _has_data(path: str) -> bool:
+    """True when ``path`` is a directory holding any data entry (names
+    starting with ``_`` or ``.`` are markers and checksums)."""
+    return os.path.exists(path) and any(
+        not e.startswith(("_", ".")) for e in os.listdir(path)
+    )
+
+
+def _staged_swap(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: str | None = None,
+    partitions: list[str] | None = None,
+) -> None:
+    """Commit ``df`` as the new content of ``path``: write it to a
+    staging directory beside ``path`` (never read-and-overwrite one
+    path in one job), move it in, then refresh Spark's caches over
+    ``path``. With ``partitions`` (directory names like ``p=a%3Ab``),
+    only those partition directories are replaced — every listed one,
+    not just those present in staging: a rewrite that empties a whole
+    partition writes no staging directory for it, and its old
+    directory (and rows) must still go. Otherwise the whole table is
+    swapped, the old data moved aside until the new is in place."""
+    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
+    write_partitioned(df, staging, partition_by)
+    if partitions is not None:
+        staged = set(os.listdir(staging))
+        for entry in partitions:
+            dst = os.path.join(path, entry)
+            if os.path.exists(dst):
+                shutil.rmtree(dst)
+            if entry in staged:
+                shutil.move(os.path.join(staging, entry), dst)
+        shutil.rmtree(staging)
+    elif os.path.exists(path):
+        backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
+        shutil.move(path, backup)
+        shutil.move(staging, path)
+        shutil.rmtree(backup)
+    else:
+        shutil.move(staging, path)
+    _refresh_swapped_path(spark, path)
 
 
 def _data_files(path: str) -> list[str]:
@@ -193,13 +235,7 @@ def compact_table(
     else:
         out = df.repartition(n_files)
 
-    staging = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-    write_partitioned(out, staging, partition_by)
-    backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    shutil.move(path, backup)
-    shutil.move(staging, path)
-    shutil.rmtree(backup)
-    _refresh_swapped_path(spark, path)
+    _staged_swap(spark, out, path, partition_by)
     return len(files_before), len(_data_files(path))
 
 
@@ -236,10 +272,7 @@ def merge_upsert(
     until a full-rewrite compaction (:func:`compact_table`) homogenizes
     the footers; Delta tables carry the schema in the log and do not.
     """
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if not exists:
+    if not _has_data(path):
         write_partitioned(updates, path, partition_by)
         return
 
@@ -278,46 +311,11 @@ def _parquet_rewrite_core(
     target = spark.read.option("mergeSchema", "true").parquet(path)
 
     if partition_by:
-        # Partition pruning: only partitions present in the change set
-        # are read, anti-joined, and rewritten. Collecting DISTINCT
-        # partition VALUES is a driver-side list of partitions (dates),
-        # not keys — bounded and cheap at any scale. The STRING form is
-        # collected alongside via Spark's own cast so the swap below
-        # reconstructs directory names with the engine's formatting
-        # (dates, timestamps, booleans), not Python's str().
-        pairs = (
-            prune_source.select(
-                F.col(partition_by).alias("__v"),
-                F.col(partition_by).cast("string").alias("__s"),
-            )
-            .distinct()
-            .collect()
+        affected, part_entries = _prune_partitions(
+            target, prune_source, partition_by
         )
-        parts = [r["__v"] for r in pairs]
-        # dict.fromkeys: "" and null both map to __HIVE_DEFAULT_PARTITION__;
-        # a change set containing both must not list the entry twice or
-        # the swap loop would re-process (and destroy) the moved directory.
-        part_entries = list(
-            dict.fromkeys(
-                f"{partition_by}={_escape_partition_value(r['__s'])}"
-                for r in pairs
-            )
-        )
-        # "" is stored as __HIVE_DEFAULT_PARTITION__ and READ BACK AS
-        # NULL, so for pruning purposes it IS null: isin("") would miss
-        # the target's existing default-partition rows while the swap
-        # deletes their directory — silent row loss (r8 ADVICE).
-        null_in_parts = any(v is None or v == "" for v in parts)
-        affected = target.filter(
-            F.col(partition_by).isin(
-                [v for v in parts if v is not None and v != ""]
-            )
-            | (F.col(partition_by).isNull() if null_in_parts else F.lit(False))
-        )
-        untouched_path_ok = True
     else:
-        affected = target
-        untouched_path_ok = False
+        affected, part_entries = target, None
 
     survivors = affected.join(remove_keys, on=keys, how="left_anti")
     extra = [c for c in inserts.columns if c not in affected.columns]
@@ -342,33 +340,50 @@ def _parquet_rewrite_core(
     else:
         merged = survivors.unionByName(inserts.select(*affected.columns))
 
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    write_partitioned(merged, staging, partition_by)
+    _staged_swap(spark, merged, path, partition_by, part_entries)
 
-    if untouched_path_ok and partition_by:
-        # Swap every PRUNED partition, not just those present in
-        # staging: a CDC delete that empties a whole partition writes
-        # no staging directory for it, and iterating staging alone
-        # would leave the old directory — and its deleted rows — in
-        # place (the delete_where swap pattern).
-        staged = {
-            e for e in os.listdir(staging) if not e.startswith(("_", "."))
-        }
-        for entry in part_entries:
-            dst = os.path.join(path, entry)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            if entry in staged:
-                shutil.move(os.path.join(staging, entry), dst)
-            # else: every row of that partition was removed — the
-            # directory stays deleted.
-        shutil.rmtree(staging)
-    else:
-        backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        shutil.move(path, backup)
-        shutil.move(staging, path)
-        shutil.rmtree(backup)
-    _refresh_swapped_path(spark, path)
+
+def _prune_partitions(
+    target: DataFrame, source: DataFrame, partition_by: str
+) -> tuple[DataFrame, list[str]]:
+    """Partition pruning for a rewrite: the ``target`` rows in the
+    partitions whose values ``source`` holds, and those partitions'
+    directory names. Collecting DISTINCT partition VALUES is a
+    driver-side list of partitions (dates), not keys — bounded and
+    cheap at any scale. The STRING form is collected alongside via
+    Spark's own cast so directory names are rebuilt with the engine's
+    formatting (dates, timestamps, booleans) and Hive escaping, not
+    Python's str()."""
+    pairs = (
+        source.select(
+            F.col(partition_by).alias("__v"),
+            F.col(partition_by).cast("string").alias("__s"),
+        )
+        .distinct()
+        .collect()
+    )
+    parts = [r["__v"] for r in pairs]
+    # dict.fromkeys: "" and null both map to __HIVE_DEFAULT_PARTITION__;
+    # a change set containing both must not list the entry twice or
+    # the swap loop would re-process (and destroy) the moved directory.
+    entries = list(
+        dict.fromkeys(
+            f"{partition_by}={_escape_partition_value(r['__s'])}"
+            for r in pairs
+        )
+    )
+    # "" is stored as __HIVE_DEFAULT_PARTITION__ and READ BACK AS
+    # NULL, so for pruning purposes it IS null: isin("") would miss
+    # the target's existing default-partition rows while the swap
+    # deletes their directory — silent row loss (r8 ADVICE).
+    null_in_parts = any(v is None or v == "" for v in parts)
+    affected = target.filter(
+        F.col(partition_by).isin(
+            [v for v in parts if v is not None and v != ""]
+        )
+        | (F.col(partition_by).isNull() if null_in_parts else F.lit(False))
+    )
+    return affected, entries
 
 
 # Characters Spark escapes in partition directory names (Hive's
@@ -403,25 +418,11 @@ def _refresh_swapped_path(spark: SparkSession, path: str) -> None:
     its captured scan; without the refresh, a post-swap action on a
     plan that cache-matches it fails FILE_NOT_EXIST (or silently serves
     pre-swap rows). Surfaced by the pipeline's idempotent re-run, where
-    the curated read is cached as the next run's FK reference.
-
-    Also releases any identity-keyed one-slot persist whose key names
-    the swapped path (operators/caching): a keyed slot warm-hits by
-    input identity, so a rewrite under its key would otherwise keep
-    serving the pre-swap materialization for the rest of the session
-    (the r10 ADVICE hazard)."""
-    from lakehouse_architecture_spark.operators.caching import (
-        release_slots_for_path,
-    )
-
+    the curated read is cached as the next run's FK reference."""
     try:
         spark.catalog.refreshByPath(path)
     except Exception:
         pass  # cache invalidation must never fail the committed write
-    try:
-        release_slots_for_path(path)
-    except Exception:
-        pass
 
 
 def apply_changes(
@@ -460,10 +461,7 @@ def apply_changes(
             "expected 'upsert' or 'delete'"
         )
     upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if not exists:
+    if not _has_data(path):
         write_partitioned(upserts, path, partition_by)
         return
     _parquet_rewrite_core(
@@ -501,50 +499,21 @@ def delete_where(
     target = spark.read.option("mergeSchema", "true").parquet(path)
 
     if partition_by:
-        # Partitions that actually contain matches: a distinct over the
-        # partition column of matching rows — partition values, bounded.
-        parts = [
-            r[0]
-            for r in target.filter(predicate)
-            .select(partition_by)
-            .distinct()
-            .collect()
-        ]
-        if not parts:
+        # only the partitions that actually contain matches
+        affected, part_entries = _prune_partitions(
+            target, target.filter(predicate), partition_by
+        )
+        if not part_entries:
             return 0
-        affected = target.filter(F.col(partition_by).isin(parts))
     else:
-        affected = target
+        affected, part_entries = target, None
 
     n_before = affected.count()
     survivors = affected.filter(~predicate)
     n_after = survivors.count()
     if n_after == n_before:
         return 0
-
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    write_partitioned(survivors, staging, partition_by)
-
-    if partition_by:
-        staged = {
-            e for e in os.listdir(staging) if not e.startswith(("_", "."))
-        }
-        for value in parts:
-            entry = f"{partition_by}={value}"
-            dst = os.path.join(path, entry)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            if entry in staged:
-                shutil.move(os.path.join(staging, entry), dst)
-            # else: every row of that partition was deleted — directory
-            # stays removed.
-        shutil.rmtree(staging)
-    else:
-        backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        shutil.move(path, backup)
-        shutil.move(staging, path)
-        shutil.rmtree(backup)
-    _refresh_swapped_path(spark, path)
+    _staged_swap(spark, survivors, path, partition_by, part_entries)
     return n_before - n_after
 
 

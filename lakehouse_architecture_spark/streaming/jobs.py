@@ -28,6 +28,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from lakehouse_architecture_spark.sinks.writers import (
+    _has_data,
+    _refresh_swapped_path,
+    _staged_swap,
+)
+
 
 def stream_csv_ingest_merge(
     spark: SparkSession,
@@ -749,12 +755,6 @@ def stream_rollup_maintain(
     return writer
 
 
-def _state_nonempty(state_path: str) -> bool:
-    return os.path.exists(state_path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(state_path)
-    )
-
-
 def _fold_batch_exactly_once(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -773,12 +773,6 @@ def _fold_batch_exactly_once(
     it must read prior state lazily so a replayed recompute before the
     seal sees the untouched pre-batch state. ``ns`` namespaces the
     commit/staging dirs so two folds can share one checkpoint."""
-    import uuid as _uuid
-
-    from lakehouse_architecture_spark.sinks.writers import (
-        _refresh_swapped_path,
-    )
-
     if checkpoint_dir is None:
         # At-least-once fallback: no stable batch identity without a
         # checkpoint, so commit markers cannot apply.
@@ -787,16 +781,7 @@ def _fold_batch_exactly_once(
         # materialize BEFORE the swap: the merged plan reads the
         # files the swap replaces
         m = merged().localCheckpoint(eager=True)
-        staging = f"{state_path}.staging-{_uuid.uuid4().hex[:8]}"
-        m.write.mode("overwrite").parquet(staging)
-        if os.path.exists(state_path):
-            backup = f"{state_path}.old-{_uuid.uuid4().hex[:8]}"
-            shutil.move(state_path, backup)
-            shutil.move(staging, state_path)
-            shutil.rmtree(backup)
-        else:
-            shutil.move(staging, state_path)
-        _refresh_swapped_path(spark, state_path)
+        _staged_swap(spark, m, state_path)
         return
 
     commit_dir = os.path.join(checkpoint_dir, f"{ns}_commits")
@@ -826,7 +811,7 @@ def _fold_batch_exactly_once(
     # replay after a crash at any point resumes the remaining moves
     # instead of recomputing against half-swapped state.
     if os.path.isdir(staged_state):
-        if _state_nonempty(state_path):
+        if _has_data(state_path):
             shutil.move(state_path, os.path.join(staging, "old"))
         if os.path.exists(state_path):
             shutil.rmtree(state_path)
@@ -858,7 +843,7 @@ def rollup_handle_batch(
 
     def _merged() -> DataFrame:
         partial = agg_state(batch_df, keys, value)
-        if _state_nonempty(state_path):
+        if _has_data(state_path):
             prior = spark.read.parquet(state_path)
             return merge_agg_state(prior, partial)
         return partial
@@ -953,7 +938,7 @@ def kmv_handle_batch(
         partial = kmv_sketch_by(hs, group_col, k).select(
             group_col, F.col("kmv").alias("kmv_b")
         )
-        if not _state_nonempty(state_path):
+        if not _has_data(state_path):
             return partial.select(
                 group_col, F.col("kmv_b").alias("kmv")
             )

@@ -888,12 +888,13 @@ def test_word_spans_edges(spark):
     assert (r.a, r.b, r.c) == (True, False, False)
 
 
-def test_one_slot_persist(spark):
+def test_one_slot_persist(spark, tmp_path):
     """The r9 cache-leak fix: lazy query functions persist heavy
     intermediates through NAMED one-slot caches — each call releases
     the slot's previous relation (they cannot unpersist in a finally;
     the consuming action is the caller's), so a long driver/bench
-    session holds at most one relation per call site."""
+    session holds at most one relation per call site. A slot warm-hits
+    only on the same derived identity: live session, plan and files."""
     from lakehouse_architecture_spark.operators.caching import (
         _SLOTS,
         one_slot_persist,
@@ -922,34 +923,44 @@ def test_one_slot_persist(spark):
     other = one_slot_persist(df3, slot="t-other")
     assert second.storageLevel.useMemory and other.storageLevel.useMemory
 
-    # identity-aware reuse (r10): an equal key returns the slot's
-    # ALREADY-WARM relation instead of unpersist+rebuild...
-    keyed = one_slot_persist(df1, slot="t-keyed", key=("sf", 8))
-    again = one_slot_persist(df2, slot="t-keyed", key=("sf", 8))
+    # identity-aware reuse: the same plan rebuilt from scratch over the
+    # same files returns the slot's ALREADY-WARM relation...
+    path = str(tmp_path / "t")
+    spark.range(20).write.parquet(path)
+
+    def build(lo, session=spark):
+        return session.read.parquet(path).filter(F.col("id") > lo)
+
+    keyed = one_slot_persist(build(5), slot="t-keyed")
+    again = one_slot_persist(build(5), slot="t-keyed")
     assert again is keyed and keyed.storageLevel.useMemory
-    # ...a DIFFERENT key evicts and re-persists...
-    swapped = one_slot_persist(df2, slot="t-keyed", key=("sf2", 8))
+    # ...a DIFFERENT plan over the same files evicts and re-persists...
+    swapped = one_slot_persist(build(6), slot="t-keyed")
     assert swapped is not keyed and not keyed.storageLevel.useMemory
-    # ...and key=None never matches (no identity claim)
-    anon = one_slot_persist(df3, slot="t-keyed")
-    assert anon is not swapped and not swapped.storageLevel.useMemory
+    assert swapped.count() == 13
+    # ...and so does the same plan from another session
+    other_session = one_slot_persist(
+        build(6, spark.newSession()), slot="t-keyed"
+    )
+    assert other_session is not swapped
+    assert _SLOTS["t-keyed"][1] is other_session
 
     # a DE-WARMED holder is a miss, not a hit: Spark's CacheManager is
     # plan-keyed, so another slot sharing the same logical plan can
     # unpersist this slot's entry out from under it — the registry
     # must detect it and re-persist instead of returning a cold frame
-    rewarm1 = one_slot_persist(df1, slot="t-rewarm", key=("k",))
+    rewarm1 = one_slot_persist(build(5), slot="t-rewarm")
     rewarm1.unpersist(blocking=False)  # simulate shared-entry eviction
-    rewarm2 = one_slot_persist(df1, slot="t-rewarm", key=("k",))
-    assert rewarm2.storageLevel.useMemory
+    rewarm2 = one_slot_persist(build(5), slot="t-rewarm")
+    assert rewarm2 is not rewarm1 and rewarm2.storageLevel.useMemory
 
-    # the span queries route through the "dedup-sim-spans" slot, keyed
-    # by (sf_dir, k) so consecutive same-input span queries stay warm
-    spans = _persist_spans(df1, "/tmp/sf-test", 8)
+    # the span queries route through the "dedup-sim-spans" slot, so
+    # consecutive same-input span queries stay warm
+    spans = _persist_spans(df1)
     assert spans.storageLevel.useMemory
     assert _SLOTS["dedup-sim-spans"][1] is spans
-    assert _persist_spans(df2, "/tmp/sf-test", 8) is spans
-    assert _persist_spans(df2, "/tmp/sf-other", 8) is not spans
+    assert _persist_spans(df1) is spans
+    assert _persist_spans(df2) is not spans
 
     assert release_slots("t-") == 4
     assert not second.storageLevel.useMemory
@@ -957,141 +968,33 @@ def test_one_slot_persist(spark):
     assert "dedup-sim-spans" not in _SLOTS
 
 
-def test_release_slots_for_path(spark):
-    """The r10 ADVICE hazard closed: a write that rewrites files under
-    a keyed slot's input path must stale the slot, or the warm hit
-    serves the pre-rewrite materialization for the whole session. The
-    staged-swap writers call this via _refresh_swapped_path; keyless
-    slots never warm-hit and are left alone."""
-    from lakehouse_architecture_spark.operators.caching import (
-        _SLOTS,
-        one_slot_persist,
-        release_slots,
-        release_slots_for_path,
-    )
-
-    df1 = spark.createDataFrame([(1,)], "x long")
-    df2 = spark.createDataFrame([(2,)], "x long")
-    keyed = one_slot_persist(df1, slot="p-keyed", key=("/tmp/sf-rel", 8))
-    anon = one_slot_persist(df2, slot="p-anon")
-
-    # unrelated path: nothing released, the keyed slot still warm-hits
-    assert release_slots_for_path("/tmp/other-dir") == 0
-    assert one_slot_persist(df2, slot="p-keyed", key=("/tmp/sf-rel", 8)) is keyed
-
-    # a rewrite UNDER the keyed dir stales it; the keyless slot stays
-    assert release_slots_for_path("/tmp/sf-rel/orders.parquet") == 1
-    assert "p-keyed" not in _SLOTS and not keyed.storageLevel.useMemory
-    assert anon.storageLevel.useMemory
-
-    # containment works in the other direction too (parent rewritten)
-    rekeyed = one_slot_persist(df1, slot="p-keyed", key=("/tmp/sf-rel/sub", 8))
-    assert release_slots_for_path("/tmp/sf-rel") == 1
-    assert not rekeyed.storageLevel.useMemory
-
-    # the writer chokepoint routes here: a staged-swap refresh over a
-    # keyed path must drop the slot even though no Spark cache exists
-    from lakehouse_architecture_spark.sinks.writers import (
-        _refresh_swapped_path,
-    )
-
-    one_slot_persist(df1, slot="p-keyed", key=("/tmp/sf-rel", 8))
-    _refresh_swapped_path(spark, "/tmp/sf-rel")
-    assert "p-keyed" not in _SLOTS
-
-
-def test_release_slots_for_path_nested_tuple_key(spark):
-    """The r14 ADVICE gap closed: the minhash family registers NESTED
-    tuple keys — ((sf_dir, table), shingle_n, max_df) — and a
-    top-level-only element walk neither abspath-resolved the inner
-    sf_dir nor matched it on release, so a rewrite under sf_dir kept
-    serving the stale posting relation. Nested keys must now resolve
-    at registration (relative path pinned to the registering CWD) and
-    release on a path overlap at any nesting depth."""
-    import os
+def test_one_slot_persist_sees_swapped_files(spark, tmp_path):
+    """A slot over a parquet directory that is replaced by a plain file
+    swap — no release call, no ``refreshByPath`` — serves the NEW rows:
+    the swap changes the file listing, so the next build is a miss.
+    Before the swap, a rebuild over the unchanged files warm-hits."""
+    import shutil
 
     from lakehouse_architecture_spark.operators.caching import (
-        _SLOTS,
-        _normalize_key,
         one_slot_persist,
         release_slots,
-        release_slots_for_path,
     )
 
-    df1 = spark.createDataFrame([(1,)], "x long")
-    df2 = spark.createDataFrame([(2,)], "x long")
-    nested_key = (("/tmp/sf-nest", "documents"), 5, 40)
-    slot = one_slot_persist(df1, slot="n-keyed", key=nested_key)
+    path = str(tmp_path / "t")
+    spark.range(100).write.parquet(path)
+    held = one_slot_persist(spark.read.parquet(path), slot="t-swap")
+    assert held.count() == 100
+    assert one_slot_persist(spark.read.parquet(path), slot="t-swap") is held
 
-    # warm hit on the equal nested key
-    assert one_slot_persist(df2, slot="n-keyed", key=nested_key) is slot
+    staged = str(tmp_path / "staged")
+    spark.range(150).write.parquet(staged)
+    shutil.move(path, str(tmp_path / "old"))
+    shutil.move(staged, path)
 
-    # a rewrite under the nested sf_dir must stale it
-    assert release_slots_for_path("/tmp/sf-nest/documents.parquet") == 1
-    assert "n-keyed" not in _SLOTS and not slot.storageLevel.useMemory
-
-    # registration-time abspath applies INSIDE nested tuples too: a
-    # relative inner path and its absolute form are the same identity
-    rel_key = (("testdata/sf-nest", "documents"), 5)
-    abs_key = ((os.path.abspath("testdata/sf-nest"), "documents"), 5)
-    assert _normalize_key(rel_key) == _normalize_key(abs_key)
-    warm = one_slot_persist(df1, slot="n-keyed", key=rel_key)
-    assert one_slot_persist(df2, slot="n-keyed", key=abs_key) is warm
-    assert release_slots("n-") == 1
-
-
-def test_release_slots_for_path_relative_and_cwd(spark):
-    """The r12/r13 ADVICE contracts on RELATIVE path keys, under their
-    own test name so a failure attributes to the right contract (they
-    were previously spliced into the nested-tuple test — r15 ADVICE):
-    a bare relative key releases via its absolute spelling, a
-    slash-free label never participates, and registration-time abspath
-    survives a CWD change before release."""
-    import os
-
-    from lakehouse_architecture_spark.operators.caching import (
-        _SLOTS,
-        one_slot_persist,
-        release_slots,
-        release_slots_for_path,
-    )
-
-    df1 = spark.createDataFrame([(1,)], "x long")
-
-    # r12 ADVICE: a slot keyed with a BARE relative path (no ./ prefix)
-    # must still be releasable by a writer rewriting under it — both
-    # sides abspath-normalize at match time, so relative and absolute
-    # spellings of the same dir compare equal.
-    bare = one_slot_persist(df1, slot="p-bare", key=("testdata/sfX", 8))
-    assert (
-        release_slots_for_path(
-            os.path.abspath("testdata/sfX/orders.parquet")
-        )
-        == 1
-    )
-    assert "p-bare" not in _SLOTS and not bare.storageLevel.useMemory
-
-    # ...but a slash-free label (table name, corpus tag) never
-    # participates, even when it equals the target's basename.
-    lbl = one_slot_persist(df1, slot="p-label", key=("sf-rel", 8))
-    assert release_slots_for_path("sf-rel") == 0
-    assert "p-label" in _SLOTS and lbl.storageLevel.useMemory
-
-    # r13 ADVICE: relative keys are abspath-resolved at REGISTRATION,
-    # so a CWD change between registration and release cannot make the
-    # release silently miss (the stale-slot direction). Register under
-    # one CWD, release by the absolute path from a different CWD.
-    reg_abs = os.path.abspath("testdata/sfY")
-    cwd_slot = one_slot_persist(df1, slot="p-cwd", key=("testdata/sfY", 8))
-    old_cwd = os.getcwd()
-    os.chdir("/tmp")
-    try:
-        assert release_slots_for_path(reg_abs) == 1
-    finally:
-        os.chdir(old_cwd)
-    assert "p-cwd" not in _SLOTS and not cwd_slot.storageLevel.useMemory
-
-    release_slots("p-")
+    fresh = one_slot_persist(spark.read.parquet(path), slot="t-swap")
+    assert fresh is not held
+    assert fresh.count() == 150
+    assert release_slots("t-swap") == 1
 
 
 # --- KMV sketch ---------------------------------------------------------

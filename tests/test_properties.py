@@ -643,8 +643,9 @@ def test_prefix_filter_warm_slot_shared_across_thresholds(spark):
     slot — and the second threshold's results through the WARM slot
     must equal its cold results. (Before the refactor prefix_len was
     baked into the persisted relation; a warm hit from the other
-    threshold's key would have sliced the WRONG prefix length.)"""
+    threshold's build would have sliced the WRONG prefix length.)"""
     from lakehouse_architecture_spark.operators.caching import (
+        _SLOTS,
         release_slots,
     )
     from lakehouse_architecture_spark.operators.minhash import (
@@ -662,11 +663,11 @@ def test_prefix_filter_warm_slot_shared_across_thresholds(spark):
         docs, "doc long, grams array<string>"
     )
 
-    def run(t_num, t_den, slot=None, key=None):
+    def run(t_num, t_den, slot=None):
         return sorted(
             (r.doc_a, r.doc_b, r.n_inter, r.n_union)
             for r in prefix_filter_jaccard_pairs(
-                gv, t_num=t_num, t_den=t_den, slot=slot, key=key
+                gv, t_num=t_num, t_den=t_den, slot=slot
             ).collect()
         )
 
@@ -674,14 +675,18 @@ def test_prefix_filter_warm_slot_shared_across_thresholds(spark):
     cold_strict = run(4, 5)
     try:
         # loose first warms the shared slot; strict must reuse it
-        warm_loose = run(3, 10, slot="t-pf-shared", key=("corpus", 1))
-        warm_strict = run(4, 5, slot="t-pf-shared", key=("corpus", 1))
+        warm_loose = run(3, 10, slot="t-pf-shared")
+        held = _SLOTS["t-pf-shared"][1]
+        warm_strict = run(4, 5, slot="t-pf-shared")
+        assert _SLOTS["t-pf-shared"][1] is held
         assert warm_loose == cold_loose
         assert warm_strict == cold_strict
         # and in the driver-window order (strict first), the reverse
         release_slots("t-pf-shared")
-        warm_strict2 = run(4, 5, slot="t-pf-shared", key=("corpus", 1))
-        warm_loose2 = run(3, 10, slot="t-pf-shared", key=("corpus", 1))
+        warm_strict2 = run(4, 5, slot="t-pf-shared")
+        held = _SLOTS["t-pf-shared"][1]
+        warm_loose2 = run(3, 10, slot="t-pf-shared")
+        assert _SLOTS["t-pf-shared"][1] is held
         assert warm_strict2 == cold_strict
         assert warm_loose2 == cold_loose
     finally:

@@ -126,6 +126,33 @@ def test_delete_where_partition_pruned(spark, tmp_path):
     assert {r.id for r in spark.read.parquet(path).collect()} == set(range(5, 10))
 
 
+def test_delete_where_escaped_and_null_partitions(spark, tmp_path):
+    """DELETE prunes and swaps with the MERGE core's partition naming:
+    a value Spark escapes in the directory name (``a:b`` is stored as
+    ``p=a%3Ab``) and the null partition (``__HIVE_DEFAULT_PARTITION__``)
+    both lose exactly the matching rows."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_architecture_spark.sinks.writers import (
+        delete_where,
+        write_partitioned,
+    )
+
+    path = str(tmp_path / "t")
+    rows = [(1, "a:b"), (2, "a:b"), (3, None), (4, None), (5, "plain")]
+    write_partitioned(
+        spark.createDataFrame(rows, "id int, p string"), path, "p"
+    )
+
+    def ids():
+        return {r.id for r in spark.read.parquet(path).collect()}
+
+    assert delete_where(spark, path, F.col("id") == 1, partition_by="p") == 1
+    assert ids() == {2, 3, 4, 5}
+    assert delete_where(spark, path, F.col("id") == 3, partition_by="p") == 1
+    assert ids() == {2, 4, 5}
+
+
 def test_delta_merge_branch_choreography(spark, tmp_path, monkeypatch):
     """delta-spark cannot be installed here (no package network — see
     README), so the ``HAVE_DELTA`` branch is exercised with a recording
